@@ -60,6 +60,17 @@ def _cpus() -> int:
         return 32
 
 
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of the host's physical
+    memory, between 1g and 32g: a heap larger than the host lets one
+    long-lived session (a whole test run) grow until the OS kills it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32, max(1, total // 4 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "flink-streaming-etl-spark",
     master: str | None = None,
@@ -77,7 +88,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -92,7 +103,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Long-lived driver hygiene: ContextCleaner frees shuffle files and
         # broadcast blocks only when driver GC collects their references —
-        # with a 32g heap, full GCs are rare and a many-query session (the
+        # with a large heap, full GCs are rare and a many-query session (the
         # bench runs 113 queries × 3 passes in one JVM) accumulates
         # gigabytes of dead shuffle/broadcast state, measurably slowing
         # late queries (~1.5× by the end of a bench sweep). The default

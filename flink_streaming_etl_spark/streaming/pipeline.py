@@ -6,14 +6,16 @@ Per micro-batch (the materialize-then-recompute loop of SURVEY.md §7):
 2. merge it into the per-source latest-state table (upsert + deletes),
 3. re-run the downstream relational query (plain DataFrame ops) over the
    materialized states,
-4. upsert the result into the keyed sink, deleting disappeared keys.
+4. replace the keyed sink's content with the result (complete mode, see
+   ``upsert_sink``): a key missing from the result is gone from the sink.
 
 Step 3 recomputes rather than incrementalizes — this is exactly what makes
-retraction correct for free (flink-ddl.sql:213: totals must drop when an
-order flips to 'closed'), at a per-batch cost proportional to state size;
-individual aggregates can be incrementalized later without changing the
-contract. ``run_batch`` is the same loop driven by a plain DataFrame, so
-every pipeline is testable without Kafka or even a streaming trigger.
+retraction and delete propagation correct for free (flink-ddl.sql:213:
+totals must drop when an order flips to 'closed'), at a per-batch cost
+proportional to state size; individual aggregates can be incrementalized
+later without changing the contract. ``run_batch`` is the same loop driven
+by a plain DataFrame, so every pipeline is testable without Kafka or even a
+streaming trigger.
 """
 
 from __future__ import annotations
@@ -22,21 +24,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_streaming_etl_spark.sources.cdc import (
-    CdcSource,
-    apply_changelog,
-    latest_state_with_deletes,
-)
+from flink_streaming_etl_spark.sources.cdc import CdcSource, apply_changelog
 from flink_streaming_etl_spark.streaming.upsert_sink import KeyedParquetSink
-
-import pyspark.sql.functions as F
 
 
 class CdcPipeline:
     """One continuous query: N CDC sources → relational query → upsert sink.
 
     ``query`` receives {source_name: latest_state_df} and returns the result
-    DataFrame (its PK = sink PK)."""
+    DataFrame (its PK = sink PK, one row per key)."""
 
     def __init__(
         self,
@@ -71,22 +67,9 @@ class CdcPipeline:
 
     def run_batch(self, chunks: dict[str, DataFrame]) -> None:
         """Drive one micro-batch from already-parsed envelope chunks."""
-        delete_keys: dict[str, DataFrame] = {}
         for name, chunk in chunks.items():
             self.apply_chunk(name, chunk)
-        result = self.recompute()
-        # Delete propagation: sink keys not present in the recomputed result
-        # must be removed (a key disappears when its rows were deleted or
-        # filtered out upstream).
-        if self.sink.exists():
-            stale = self.sink.read().join(
-                result.select(*self.sink.primary_key),
-                on=self.sink.primary_key,
-                how="left_anti",
-            )
-        else:
-            stale = None
-        self.sink.merge(result, deletes=stale)
+        self.sink.replace(self.recompute())
 
     def run_stream(
         self,

@@ -24,8 +24,10 @@ Spark realization: one `CdcPipeline`-style loop per sink, all reading the
 SAME materialized per-source states (materialize-then-recompute, SURVEY.md
 §7), so a single changelog batch fans out to every sink consistently — the
 multi-query-sharing-sources behavior of a Flink session submitting N
-INSERTs over the same source tables. The manual 256-bucket salted rollup is
-deliberately NOT reproduced: Spark's hash aggregation is already
+INSERTs over the same source tables. Each recomputed result is its sink's
+entire new content, so it replaces the sink (complete mode) instead of
+being merged against the sink's last output. The manual 256-bucket salted
+rollup is deliberately NOT reproduced: Spark's hash aggregation is already
 partial+final and AQE handles skew (tested equal in the registry:
 user_day_stats_salted ≡ user_day_stats).
 """
@@ -260,8 +262,9 @@ class ReferencePipeline:
         return queries
 
     def run_batch(self, chunks: dict[str, DataFrame]) -> None:
-        """One micro-batch: merge every source's chunk once, then refresh
-        every sink from the SAME states (multi-query source sharing)."""
+        """One micro-batch: merge every source's chunk once, then replace
+        every sink's content from the SAME states (multi-query source
+        sharing)."""
         for name, chunk in chunks.items():
             src = self.sources[name]
             merged = apply_changelog(self._states.get(name), chunk, src.primary_key)
@@ -275,11 +278,4 @@ class ReferencePipeline:
                     f"query '{name}' does not produce upsert key {missing} "
                     f"required by its sink"
                 )
-            stale = (
-                sink.read().join(
-                    result.select(*sink.primary_key), on=sink.primary_key, how="left_anti"
-                )
-                if sink.exists()
-                else None
-            )
-            sink.merge(result, deletes=stale)
+            sink.replace(result)

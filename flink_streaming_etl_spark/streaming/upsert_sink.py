@@ -2,12 +2,23 @@
 
 Stand-in for the reference's Elasticsearch-7 upsert sink (flink-ddl.sql:
 96-109: PK-keyed index, several queries share one index): a parquet-backed
-keyed table that merges each micro-batch by primary key. On a real cluster
-the same ``merge`` call targets Delta ``MERGE INTO`` or the ES connector
-(`es.write.operation=upsert`, `es.mapping.id=id`); the orchestration and
-semantics here are identical.
+keyed table with two write modes.
 
-Idempotence: re-merging the same batch is a no-op (same keys, same rows) —
+- Complete mode, ``replace(result)``: ``result`` is the sink's entire new
+  content. Every key in it wins and every key not in it is gone, so a
+  recomputed query result needs no read of the old content, no keyed merge
+  and no stale-key anti-join. The CDC pipelines refresh their sinks this
+  way.
+- Update mode, ``merge(batch, deletes)``: upsert the batch's rows by
+  primary key and drop the keys in ``deletes``; keys the batch does not
+  mention keep their rows. On a real cluster the same call targets Delta
+  ``MERGE INTO`` or the ES connector (`es.write.operation=upsert`,
+  `es.mapping.id=id`).
+
+Both modes write to ``<path>.tmp`` and swap it in, so a failed write leaves
+the previous content readable.
+
+Idempotence: re-applying the same batch is a no-op (same keys, same rows) —
 this is what turns at-least-once delivery into effectively-once end-to-end
 (reference claim README.md:347; SURVEY.md §2.5 T6).
 """
@@ -17,9 +28,19 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _write_and_swap(writer: DataFrameWriter, path: str) -> None:
+    """Write to ``<path>.tmp``, then swap it in for ``path``. A write that
+    fails leaves ``path`` untouched."""
+    tmp = path + ".tmp"
+    writer.mode("overwrite").parquet(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.replace(tmp, path)
 
 
 class KeyedParquetSink:
@@ -36,8 +57,14 @@ class KeyedParquetSink:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
 
+    def replace(self, result: DataFrame) -> None:
+        """Complete mode: ``result`` (one row per key) becomes the sink's
+        entire content."""
+        _write_and_swap(result.write, self.path)
+
     def merge(self, batch: DataFrame, deletes: DataFrame | None = None) -> None:
-        """Upsert ``batch`` rows by PK; drop PKs present in ``deletes``.
+        """Update mode: upsert ``batch`` rows by PK; drop PKs present in
+        ``deletes``.
 
         Dotted ES field names (flink-ddl.sql:98-102) are handled upstream
         by nesting into structs (see ``nest_dotted``)."""
@@ -60,11 +87,7 @@ class KeyedParquetSink:
             merged = merged.join(
                 deletes.select(*pk).dropDuplicates(pk), on=pk, how="left_anti"
             )
-        tmp = self.path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        self.replace(merged)
 
 
 def nest_dotted(df: DataFrame) -> DataFrame:
@@ -107,6 +130,9 @@ class BucketPartitionedSink(KeyedParquetSink):
     torn (the base class swaps atomically via rename). Production targets
     with a transaction log (Delta/Iceberg) close that gap; the replay-
     idempotent merge means re-running the batch also repairs it.
+
+    ``replace`` (complete mode) rewrites every bucket and swaps the whole
+    layout in by tmp + rename, like the base class.
     """
 
     def __init__(
@@ -129,6 +155,12 @@ class BucketPartitionedSink(KeyedParquetSink):
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path).drop("_bucket")
+
+    def replace(self, result: DataFrame) -> None:
+        _write_and_swap(
+            result.withColumn("_bucket", self._bucket()).write.partitionBy("_bucket"),
+            self.path,
+        )
 
     def merge(self, batch: DataFrame, deletes: DataFrame | None = None) -> None:
         pk = self.primary_key
@@ -333,8 +365,4 @@ class AdditivePartialSink:
                     "refusing to store silent NULLs"
                 )
             merged = merged.drop(*[f"__had_{c}" for c in self.decimal_cols])
-        tmp = self.path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        _write_and_swap(merged.write, self.path)

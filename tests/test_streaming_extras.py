@@ -336,6 +336,32 @@ def test_bucket_partitioned_sink_touches_only_batch_buckets(spark, tmp_path):
     assert len(sink.read().collect()) == 65 - n_victims
 
 
+@pytest.mark.parametrize("bucketed", [False, True], ids=["keyed", "bucketed"])
+def test_replace_failure_keeps_previous_content(spark, tmp_path, bucketed):
+    """Complete-mode ``replace`` writes aside and swaps in: a result whose
+    evaluation fails raises, and the previous content reads back
+    unchanged."""
+    from flink_streaming_etl_spark.streaming.upsert_sink import BucketPartitionedSink
+
+    path = str(tmp_path / "sink")
+    sink = (BucketPartitionedSink(spark, path, "id", n_buckets=4) if bucketed
+            else KeyedParquetSink(spark, path, "id"))
+    sink.replace(spark.createDataFrame(
+        [(f"k{i}", i * 1.0) for i in range(8)], "id string, v double"))
+    before = sorted(map(tuple, sink.read().collect()))
+    assert len(before) == 8
+
+    failing = spark.range(4).select(
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("id"),
+        F.when(F.col("id") == 3, F.raise_error(F.lit("replace-boom")))
+        .otherwise(F.col("id").cast("double"))
+        .alias("v"),
+    )
+    with pytest.raises(Exception, match="replace-boom"):
+        sink.replace(failing)
+    assert sorted(map(tuple, sink.read().collect())) == before
+
+
 def test_jdbc_options_construction_and_partitioned_scan():
     """S3/S4 live path, connection-free: the JDBC option set mirrors the
     reference's connector block (flink-ddl.sql:84-94) and exposes the
